@@ -16,6 +16,7 @@ import os
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sparkflow_spark.memo import Memo
 from sparkflow_spark.session import ensure_runtime_configs
 
 TABLE_NAMES: tuple[str, ...] = (
@@ -209,35 +210,34 @@ def load_tables(spark: SparkSession, sf_dir: str) -> dict[str, DataFrame]:
 # DataFrames are immutable logical plans — safe to memoize per
 # (session, dir, table). Saves repeated parquet-footer reads when the
 # driver runs dozens of registered queries back to back.
-_SCAN_CACHE: dict[tuple[int, str, str], DataFrame] = {}
+_SCAN_CACHE = Memo(1024)
 
 
 def cached_table(spark: SparkSession, sf_dir: str, name: str) -> DataFrame:
-    key = (id(spark), sf_dir, name)
-    df = _SCAN_CACHE.get(key)
-    if df is None:
-        ensure_runtime_configs(spark)
-        df = _SCAN_CACHE[key] = load_table(spark, sf_dir, name)
-    return df
+    return _SCAN_CACHE.get_or_build(
+        spark, (sf_dir, name), lambda: load_table(ensure_runtime_configs(spark), sf_dir, name)
+    )
 
 
-_DIM_CACHE: dict[tuple[int, str], int] = {}
+_DIM_CACHE = Memo(1024)
 
 
 def embedding_dim(spark: SparkSession, sf_dir: str) -> int:
     """Embedding dimensionality of a fixture dir (list<float> carries no
     length in the schema, so probe one row — memoized per session+dir)."""
-    key = (id(spark), sf_dir)
-    if key not in _DIM_CACHE:
+
+    def build() -> int:
         row = cached_table(spark, sf_dir, "embeddings").select("embedding").first()
-        _DIM_CACHE[key] = len(row[0])
+        dim = len(row[0])
         # r14: teach dot_seq this corpus's layout, so pair-scoring on a
         # non-64/16 embedding table gets the codegen'd unrolled chain
         # instead of silently falling back to the interpreted fold
         from sparkflow_spark.functions.vector import register_unroll_dim
 
-        register_unroll_dim(_DIM_CACHE[key])
-    return _DIM_CACHE[key]
+        register_unroll_dim(dim)
+        return dim
+
+    return _DIM_CACHE.get_or_build(spark, (sf_dir,), build)
 
 
 class Tables:

@@ -823,11 +823,3 @@ def avro_string_hex_sql(expr: str) -> str:
     """Hex of the Avro string encoding: zigzag-varint byte length then
     utf8 bytes."""
     return f"({avro_long_hex_sql(f'octet_length(encode({expr}))')} || hex(encode({expr})))"
-
-
-def pb_tag_hex(field_number: int, wire_type: int) -> str:
-    """Hex literal of a (single-byte) protobuf tag."""
-    key = field_number << 3 | wire_type
-    if key >= 128:
-        raise ValueError("tag needs multi-byte varint; keep field numbers < 16")
-    return f"{key:02X}"

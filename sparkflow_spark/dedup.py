@@ -41,6 +41,7 @@ from sparkflow_spark.functions.text import (
     simhash64,  # noqa: F401 — re-exported; definitional twin of simhash64_fast
     with_tokens,
 )
+from sparkflow_spark.memo import Memo
 
 # Mersenne prime 2^31-1 for the (a*x + b) mod p universal-hash family.
 # The field must be small enough that a*x + b stays inside int64 under
@@ -295,11 +296,9 @@ def simhash_near_duplicates(
 # construction + analysis py4j cost (~1 s at sf0.1, ~40% of steady-state
 # wall clock; BASELINE.md) for repeated calls, which is exactly what the
 # bench's steady-state pass and the driver's back-to-back registry sweep
-# do. Keyed on id(df); the cache VALUE pins the input df object so its
-# id cannot be reused by a GC'd successor while the entry lives. Bounded
-# FIFO — a long-lived driver process cycling many inputs stays flat.
-_NGRAM_RESULT_CACHE: dict[tuple, tuple[DataFrame, DataFrame]] = {}
-_NGRAM_CACHE_MAX = 64
+# do. Owned by the input df; bounded, so a long-lived driver process
+# cycling many inputs stays flat.
+_NGRAM_RESULT_CACHE = Memo(64)
 
 
 def _resolve_index_partitions(df: DataFrame, index_partitions: int | None) -> int:
@@ -397,7 +396,6 @@ def ngram_jaccard_pairs(
     threshold: float = 0.8,
     max_shingle_freq: int | None = 1000,
     index_partitions: int | None = None,
-    expansion: str = "arrow",
 ) -> DataFrame:
     """Exact n-gram Jaccard similarity via inverted-index join.
 
@@ -406,17 +404,6 @@ def ngram_jaccard_pairs(
     drops boilerplate shingles that appear in more than N docs — the
     classic skew guard: without it one stop-shingle creates an O(n²)
     bucket at scale.
-
-    ``expansion`` selects the capped path's per-shingle pair-expansion
-    kernel: ``"arrow"`` (default) runs it as one mapInPandas over the
-    grouped index — output-identical to the ``"hof"`` Catalyst form
-    (pinned by test) with the same steady-state wall clock, but the
-    interpreted-HOF form needs 4+ executions for the JVM to C2-compile
-    its nested-lambda evaluation path (measured sf0.1 convergence
-    7.7 → 1.8 → 1.2 → 1.1 s vs arrow's 3.0 → 1.15 → 1.0 s) — in a
-    mixed-query session the HOF form's readings land mid-warmup, which
-    was the whole r8 "in-session edge" (BASELINE.md round-9). The HOF
-    form stays as the zero-Python definitional twin.
     """
     # Resolve index_partitions BEFORE building the cache key: the
     # None-resolution reads runtime state (defaultParallelism, plan-time
@@ -424,20 +411,19 @@ def ngram_jaccard_pairs(
     # partitioned for a previous session config / input size after
     # either changes (round-4 advice).
     index_partitions = _resolve_index_partitions(df, index_partitions)
-    cache_key = (
-        id(df.sparkSession),
-        id(df),
-        text_col,
-        id_col,
-        shingle_k,
-        threshold,
-        max_shingle_freq,
-        index_partitions,
-        expansion,
-    )
-    hit = _NGRAM_RESULT_CACHE.get(cache_key)
-    if hit is not None and hit[0] is df:
-        return hit[1]
+    args = (text_col, id_col, shingle_k, threshold, max_shingle_freq, index_partitions)
+    # the uncapped path localCheckpoints its index lazily; caching that
+    # plan would share (and on re-run, re-materialize) executor-resident
+    # blocks across invocations — only memoize the pure-plan capped path
+    if max_shingle_freq is None:
+        return _ngram_jaccard_plan(df, *args)
+    return _NGRAM_RESULT_CACHE.get_or_build(df, args, lambda: _ngram_jaccard_plan(df, *args))
+
+
+def _ngram_jaccard_plan(
+    df: DataFrame, text_col: str, id_col: str, shingle_k: int, threshold: float,
+    max_shingle_freq: int | None, index_partitions: int,
+) -> DataFrame:
     # shared candidate-generation stage (see _hashed_shingle_index):
     # zero-shuffle (id, n, shingle) index, one shingle-keyed exchange
     # that co-partitions the self-join sides AND the frequency cap —
@@ -449,7 +435,7 @@ def ngram_jaccard_pairs(
         # self-join. The cap is the shared window filter (see
         # _df_cap_filter — skew guard + df=1 tail drop); survivors
         # collect into per-shingle doc arrays BOUNDED by the cap, and
-        # the ≤ C(cap,2) pairs per shingle expand with one HOF. vs the
+        # the ≤ C(cap,2) pairs per shingle expand in one pass. vs the
         # former checkpoint + self-join formulation this touches the
         # index ONCE — no materialization, no lineage truncation, and
         # no per-invocation physical-planning cost (localCheckpoint
@@ -471,64 +457,42 @@ def ngram_jaccard_pairs(
         # GC-pressure tail shrinks). Exactness: parity pinned by the
         # DuckDB oracle (which applies the threshold on the full result)
         # and the capped-vs-uncapped equivalence test.
-        if expansion == "arrow":
-            # Arrow kernel: one mapInPandas pass over the (shingle,
-            # docs) groups; per group the ≤C(cap,2) combinations with
-            # the size-ratio prune run as a plain python loop over an
-            # Arrow batch (docs arrays are cap-bounded, so per-row work
-            # is a constant; the emitted stream is ids+sizes only).
-            # Output-identical to the HOF form — same pairs, same
-            # prune — but with no interpreted-lambda evaluation path
-            # for the JVM to warm (see docstring).
-            import pandas as pd
+        # Arrow kernel: one mapInPandas pass over the (shingle, docs)
+        # groups; per group the ≤C(cap,2) combinations with the
+        # size-ratio prune run as a plain python loop over an Arrow
+        # batch (docs arrays are cap-bounded, so per-row work is a
+        # constant; the emitted stream is ids+sizes only). An
+        # interpreted-HOF expansion gives the same pairs but needs 4+
+        # executions for the JVM to C2-compile its nested-lambda path
+        # (measured sf0.1 convergence 7.7 → 1.8 → 1.2 → 1.1 s vs this
+        # kernel's 3.0 → 1.15 → 1.0 s; BASELINE.md round-9).
+        idt = df.schema[id_col].dataType.simpleString()
 
-            idt = df.schema[id_col].dataType.simpleString()
-
-            def _expand(batches):
-                for pdf in batches:
-                    ia, ib, na, nb = [], [], [], []
-                    for docs in pdf["docs"]:
-                        m = len(docs)
-                        for i in range(m - 1):
-                            x = docs[i]
-                            xn = x["n"]
-                            for j in range(i + 1, m):
-                                y = docs[j]
-                                yn = y["n"]
-                                if (xn if xn <= yn else yn) >= threshold * (
-                                    xn if xn >= yn else yn
-                                ):
-                                    ia.append(x["id"])
-                                    ib.append(y["id"])
-                                    na.append(xn)
-                                    nb.append(yn)
-                    yield pd.DataFrame(
-                        {"id_a": ia, "id_b": ib, "na": na, "nb": nb}
-                    )
-
-            expanded = g.mapInPandas(
-                _expand, f"id_a {idt}, id_b {idt}, na int, nb int"
-            )
-        else:
-            pair = F.flatten(
-                F.transform(
-                    F.col("docs"),
-                    lambda x, i: F.transform(
-                        F.filter(
-                            F.slice(F.col("docs"), i + F.lit(2), F.size(F.col("docs"))),
-                            lambda y: F.least(x["n"], y["n"])
-                            >= F.lit(threshold) * F.greatest(x["n"], y["n"]),
-                        ),
-                        lambda y: F.struct(
-                            x["id"].alias("id_a"),
-                            y["id"].alias("id_b"),
-                            x["n"].alias("na"),
-                            y["n"].alias("nb"),
-                        ),
-                    ),
+        def _expand(batches):
+            for pdf in batches:
+                ia, ib, na, nb = [], [], [], []
+                for docs in pdf["docs"]:
+                    m = len(docs)
+                    for i in range(m - 1):
+                        x = docs[i]
+                        xn = x["n"]
+                        for j in range(i + 1, m):
+                            y = docs[j]
+                            yn = y["n"]
+                            if (xn if xn <= yn else yn) >= threshold * (
+                                xn if xn >= yn else yn
+                            ):
+                                ia.append(x["id"])
+                                ib.append(y["id"])
+                                na.append(xn)
+                                nb.append(yn)
+                yield pd.DataFrame(
+                    {"id_a": ia, "id_b": ib, "na": na, "nb": nb}
                 )
-            )
-            expanded = g.select(F.explode(pair).alias("p")).select("p.*")
+
+        expanded = g.mapInPandas(
+            _expand, f"id_a {idt}, id_b {idt}, na int, nb int"
+        )
         inter = expanded.groupBy("id_a", "id_b", "na", "nb").agg(
             F.count(F.lit(1)).alias("inter")
         )
@@ -561,7 +525,7 @@ def ngram_jaccard_pairs(
             .groupBy("id_a", "id_b", "na", "nb")
             .agg(F.count(F.lit(1)).alias("inter"))
         )
-    result = (
+    return (
         inter.select(
             "id_a",
             "id_b",
@@ -569,14 +533,6 @@ def ngram_jaccard_pairs(
         )
         .filter(F.col("jaccard") >= threshold)
     )
-    # the uncapped path localCheckpoints its index lazily; caching that
-    # plan would share (and on re-run, re-materialize) executor-resident
-    # blocks across invocations — only memoize the pure-plan capped path
-    if max_shingle_freq is not None:
-        if len(_NGRAM_RESULT_CACHE) >= _NGRAM_CACHE_MAX:
-            _NGRAM_RESULT_CACHE.pop(next(iter(_NGRAM_RESULT_CACHE)))
-        _NGRAM_RESULT_CACHE[cache_key] = (df, result)
-    return result
 
 
 def ngram_containment_pairs(

@@ -222,16 +222,6 @@ def stopword_ratio(text: Column | str, stopwords: tuple[str, ...] = ENGLISH_STOP
     )
 
 
-def mean_token_length(text: Column | str) -> Column:
-    return bind(
-        tokens(text),
-        lambda toks: F.when(
-            F.size(toks) > 0,
-            F.aggregate(toks, F.lit(0), lambda acc, t: acc + F.length(t)) / F.size(toks),
-        ).otherwise(F.lit(0.0)),
-    )
-
-
 def quality_score(text: Column | str) -> Column:
     """Heuristic document quality in [0,1]: length sweet-spot, sane
     punctuation density, stopword presence, sane mean token length.
@@ -307,12 +297,6 @@ def fingerprint(text: Column | str) -> Column:
     t2-checkable; use simhash64/xxhash64 variants for speed-only paths."""
     c = F.col(text) if isinstance(text, str) else text
     return F.md5(F.lower(F.regexp_replace(F.trim(c), r"\s+", " ")))
-
-
-def content_hash(text: Column | str) -> Column:
-    """Fast 64-bit content hash (xxhash64, Spark-side only)."""
-    c = F.col(text) if isinstance(text, str) else text
-    return F.xxhash64(F.lower(F.regexp_replace(F.trim(c), r"\s+", " ")))
 
 
 def simhash64(text: Column | str) -> Column:

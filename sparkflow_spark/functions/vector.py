@@ -110,72 +110,6 @@ def dot_batched(a: Column | str, b: Column | str) -> Column:
     return _dot(ca, cb)
 
 
-def dot_seq_batched(a: Column | str, b: Column | str) -> Column:
-    """Arrow-batched, BIT-EXACT twin of :func:`dot` (r13 optimization).
-
-    :func:`dot_batched`'s einsum uses numpy's pairwise summation, so its
-    values can differ from :func:`dot` within float64 rounding error —
-    which is why every oracle-pinned pair-scoring path (the hard-negative
-    family, the IVF re-rank) stayed on the interpreted HOF and paid
-    ~2·dim interpreted expression evaluations per candidate ROW. This
-    kernel removes that trade: it accumulates DIMENSION-BY-DIMENSION
-    across the whole Arrow batch (``acc = acc + A[:,i]*B[:,i]``, acc
-    starting at +0.0), so each row's value is the same left-to-right
-    chain of IEEE-double multiply/adds as ``aggregate(zip_with(...))``
-    — bit-identical results (parity-pinned in
-    tests/test_round13_opt.py), at d vectorized numpy ops per batch
-    instead of ~2·d interpreted evals per row.
-
-    Edge semantics mirror :func:`dot`: NULL vector, NULL element, or a
-    ragged pair → SQL NULL; empty arrays → 0.0. The one documented
-    divergence (shared with :func:`dot_batched`): a dot evaluating to
-    NaN from inf/NaN INPUTS returns SQL NULL (Arrow maps NaN→null on
-    the way back) where dot()'s JVM arithmetic keeps NaN.
-    """
-
-    def _block(va: pd.Series, vb: pd.Series) -> pd.Series:
-        try:
-            A = np.stack(va.to_numpy()).astype(np.float64, copy=False)
-            B = np.stack(vb.to_numpy()).astype(np.float64, copy=False)
-            if A.shape == B.shape:
-                acc = np.zeros(A.shape[0], dtype=np.float64)
-                for i in range(A.shape[1]):
-                    acc += A[:, i] * B[:, i]
-                return pd.Series(acc, index=va.index)
-        except (ValueError, TypeError):
-            pass
-        out = np.full(len(va), np.nan)
-        for i, (x, y) in enumerate(zip(va, vb)):
-            try:
-                xa = np.asarray(x, dtype=np.float64)
-                ya = np.asarray(y, dtype=np.float64)
-            except (ValueError, TypeError):
-                continue  # null elements → SQL NULL, matching dot()
-            if xa.shape != ya.shape:
-                continue  # ragged pair → SQL NULL, matching dot()
-            s = 0.0
-            for xv, yv in zip(xa, ya):
-                s = s + xv * yv  # left-to-right, same chain as the fold
-            out[i] = s
-        return pd.Series(out, index=va.index)
-
-    @F.pandas_udf("double")
-    def _dot(va: pd.Series, vb: pd.Series) -> pd.Series:
-        if not len(va):
-            return pd.Series([], dtype="float64")
-        if va.isna().any() or vb.isna().any():  # SQL semantics: null in → null out
-            ok = ~(va.isna() | vb.isna())
-            out = pd.Series(np.nan, index=va.index, dtype="float64")
-            if ok.any():
-                out[ok] = _block(va[ok], vb[ok])
-            return out
-        return _block(va, vb)
-
-    ca = F.col(a) if isinstance(a, str) else a
-    cb = F.col(b) if isinstance(b, str) else b
-    return _dot(ca, cb)
-
-
 # Layout dims worth an unrolled-codegen branch in dot_seq. Seeded with
 # the fixture embedding layout (64) and its matryoshka truncation (16);
 # r14 (r13 verdict ask #5): catalog.embedding_dim REGISTERS the dim it
@@ -213,23 +147,23 @@ def dot_seq(
 
     :func:`dot` never enters whole-stage codegen (higher-order functions
     are interpreted): ~2·dim boxed lambda evaluations per row dominate
-    every pair-scoring stream. :func:`dot_seq_batched` fixed that with an
-    Arrow kernel — but pays a fixed per-stage Python round-trip that
-    measurably REGRESSES the small candidate streams (A/B at sf0.1:
-    s_brute_force_top1 0.44→0.69 s best-pass). This form removes the
-    trade at both ends: for arrays of a known layout dim it emits the
-    fully unrolled expression ``0.0 + a[1]·b[1] + … + a[d]·b[d]``
-    (element_at + multiply + chained adds — plain codegen'd Catalyst,
-    zero Python, no fixed latency), guarded by ``size(a)=size(b)=d``;
-    every other shape falls through to :func:`dot` itself.
+    every pair-scoring stream. An Arrow kernel would pay a fixed
+    per-stage Python round-trip that measurably REGRESSES the small
+    candidate streams (A/B at sf0.1: s_brute_force_top1 0.44→0.69 s
+    best-pass). This form avoids both costs: for arrays of a known
+    layout dim it emits the fully unrolled expression
+    ``0.0 + a[1]·b[1] + … + a[d]·b[d]`` (element_at + multiply + chained
+    adds — plain codegen'd Catalyst, zero Python, no fixed latency),
+    guarded by ``size(a)=size(b)=d``; every other shape falls through to
+    :func:`dot` itself.
 
     Bit-exactness: the unrolled chain is the same left-to-right IEEE
     double accumulation as the fold, term for term, starting at +0.0 —
     parity is pinned in tests/test_round13_opt.py. Edge semantics are
     inherited wholesale: NULL array / NULL element → NULL (element_at
     poisons the sum exactly like the fold), ragged or unlisted dims →
-    the interpreted fold (empty → 0.0, NaN kept — unlike the Arrow
-    kernel, NaN handling matches :func:`dot` exactly).
+    the interpreted fold (empty → 0.0, NaN kept — unlike
+    :func:`dot_batched`, NaN handling matches :func:`dot` exactly).
 
     ``unroll_dims`` lists the layout dims worth a branch; ``None``
     (default) uses the module registry — seeded (64, 16) and extended

@@ -22,6 +22,8 @@ from dataclasses import dataclass, field
 
 from pyspark.sql import DataFrame, SparkSession
 
+from sparkflow_spark.memo import Memo, clear_all
+
 
 @dataclass(frozen=True)
 class Query:
@@ -39,29 +41,15 @@ REGISTRY: dict[str, Query] = {}
 # repeat invocation is safe — and it removes the per-call Catalyst
 # analysis/optimization of the full tree (measured 0.3–0.7 s on the
 # deep dedup plans), which is exactly what the bench's steady-state pass
-# and any production driver re-running fixed shapes pay otherwise. The
-# cache VALUE pins the session so its id can't be reused by a GC'd
-# successor while the entry lives. Execution is NOT cached: every
-# action on the memoized plan still computes from the parquet scans.
-# Queries whose fn does EAGER work (streaming jobs, ML training, file
-# writes) register with memo=False — skipping that work on a repeat
-# call would misreport what a re-run costs.
-_RESULT_MEMO: dict[tuple[int, str, str], tuple[SparkSession, DataFrame]] = {}
-_RESULT_MEMO_MAX = 1024
-
-
-def clear_result_memo() -> None:
-    """Drop all memoized query plans (tests / long-lived drivers) —
-    including suite-local shared-stage memos registered here."""
-    _RESULT_MEMO.clear()
-    for aux in _AUX_MEMOS:
-        aux.clear()
-
-
-# Suite modules with their own shared-intermediate memos (e.g. the
-# SemDeDup pair frame) register them here so clear_result_memo empties
-# everything a long-lived driver could hold.
-_AUX_MEMOS: list[dict] = []
+# and any production driver re-running fixed shapes pay otherwise.
+# Execution is NOT cached: every action on the memoized plan still
+# computes from the parquet scans. Queries whose fn does EAGER work
+# (streaming jobs, ML training, file writes) register with memo=False —
+# skipping that work on a repeat call would misreport what a re-run
+# costs.
+_RESULT_MEMO = Memo(1024)
+# empties every store: plans, scans, probes, models and session clones
+clear_result_memo = clear_all
 
 
 def ordered(df: DataFrame, *cols) -> DataFrame:
@@ -111,15 +99,9 @@ def register(
 
             @functools.wraps(fn)
             def wrapped(spark: SparkSession, sf_dir: str) -> DataFrame:
-                key = (id(spark), sf_dir, name)
-                hit = _RESULT_MEMO.get(key)
-                if hit is not None and hit[0] is spark:
-                    return hit[1]
-                df = fn(spark, sf_dir)
-                if len(_RESULT_MEMO) >= _RESULT_MEMO_MAX:
-                    _RESULT_MEMO.pop(next(iter(_RESULT_MEMO)))
-                _RESULT_MEMO[key] = (spark, df)
-                return df
+                return _RESULT_MEMO.get_or_build(
+                    spark, (sf_dir, name), lambda: fn(spark, sf_dir)
+                )
 
             qfn = wrapped
         else:

@@ -8,6 +8,7 @@ from pyspark.sql import DataFrame, SparkSession, Window
 
 from sparkflow_spark import similarity
 from sparkflow_spark.catalog import Tables, fan_out
+from sparkflow_spark.memo import Memo
 from sparkflow_spark.queries import REGISTRY, ordered, register
 
 # Probe set: the first 10 vectors by id — deterministic and expressible
@@ -452,18 +453,14 @@ def d_semantic_dedup(spark: SparkSession, sf: str) -> DataFrame:
 # clustering, and routing it through the pairs entry's memoized FINAL
 # frame instead fed connected_components through the repartition(1)
 # ordered() that exists only for the oracle compare (round-6 review).
-_SEM_PAIRS_MEMO: dict[tuple[int, str], tuple[SparkSession, DataFrame]] = {}
-
-from sparkflow_spark.queries import _AUX_MEMOS  # noqa: E402
-
-_AUX_MEMOS.append(_SEM_PAIRS_MEMO)
+_SEM_PAIRS_MEMO = Memo(64)
 
 
 def _sem_pairs_frame(spark: SparkSession, sf: str) -> DataFrame:
-    key = (id(spark), sf)
-    hit = _SEM_PAIRS_MEMO.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
+    return _SEM_PAIRS_MEMO.get_or_build(spark, (sf,), lambda: _build_sem_pairs(spark, sf))
+
+
+def _build_sem_pairs(spark: SparkSession, sf: str) -> DataFrame:
     t = Tables(spark, sf)
     assign = similarity.kmeans_clusters(
         t.embeddings, id_col="vec_id", vec_col="embedding",
@@ -496,7 +493,7 @@ def _sem_pairs_frame(spark: SparkSession, sf: str) -> DataFrame:
         F.col("vec_id").alias("id_b"), F.col("_v").alias("_vb"),
         F.col("_n").alias("_nb"), "cluster",
     )
-    pairs = (
+    return (
         a.join(b, "cluster")
         .where(F.col("id_a") < F.col("id_b"))
         .withColumn(
@@ -506,10 +503,6 @@ def _sem_pairs_frame(spark: SparkSession, sf: str) -> DataFrame:
         .where(F.col("cosine_raw") >= _SEMDUP_THRESHOLD)
         .select("id_a", "id_b", "cluster", "cosine_raw")
     )
-    if len(_SEM_PAIRS_MEMO) >= 64:
-        _SEM_PAIRS_MEMO.pop(next(iter(_SEM_PAIRS_MEMO)))
-    _SEM_PAIRS_MEMO[key] = (spark, pairs)
-    return pairs
 
 
 @register(

@@ -19,6 +19,7 @@ matter at 100 TB scale:
 from __future__ import annotations
 
 import os
+import warnings
 
 from pyspark.sql import SparkSession
 
@@ -119,8 +120,6 @@ def ship_package(spark: SparkSession) -> None:
         # e.g. a session mode that forbids adding files mid-flight; the
         # import-by-reference paths will still work wherever the package
         # is on the workers' PYTHONPATH — but say so instead of hiding it.
-        import warnings
-
         warnings.warn(f"ship_package: addPyFile failed ({exc}); executors must "
                       "have sparkflow_spark on their own PYTHONPATH", stacklevel=2)
     _SHIPPED.add(key)
@@ -134,10 +133,11 @@ def ensure_runtime_configs(spark: SparkSession) -> SparkSession:
     for key, value in _RUNTIME_CONFS.items():
         try:
             spark.conf.set(key, value)
-        except Exception:
+        except Exception as exc:
             # A config may be static in some deployments; never fail the
-            # query path over a tuning knob.
-            pass
+            # query path over a tuning knob, but say which one was refused.
+            warnings.warn(f"ensure_runtime_configs: could not set {key}={value} ({exc})",
+                          stacklevel=2)
     ship_package(spark)
     return spark
 

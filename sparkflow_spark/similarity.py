@@ -30,6 +30,7 @@ from sparkflow_spark.functions.vector import (
     dot_seq,
     l2_norm,
 )
+from sparkflow_spark.memo import Memo
 
 
 def _round6_half_away(x: float) -> float:
@@ -86,9 +87,8 @@ def brute_force_topk(
     )
 
 
-# (corpus-pin, fitted KMeansModel) per (session, corpus, params) — see
-# ivf_topk's cache note. Bounded FIFO.
-_IVF_MODEL_CACHE: dict[tuple, tuple] = {}
+# fitted KMeansModel per (corpus, params) — see ivf_topk's cache note
+_IVF_MODEL_CACHE = Memo(16)
 
 
 def ivf_topk(
@@ -125,22 +125,15 @@ def ivf_topk(
         array_to_vector(F.transform(vec_col, lambda x: x.cast("double"))).alias("_fv"),
     )
     # The coarse quantizer is corpus state, not query state: memoize the
-    # fitted model per (session, corpus plan, params) so repeated probes
-    # against the same corpus skip the distributed KMeans fit (~2 s of a
-    # ~2.7 s query at sf0.1). The cache value pins the corpus DataFrame
-    # so its id() cannot be reused while the entry lives (same pattern
-    # as dedup._NGRAM_RESULT_CACHE); production FAISS-style IVF likewise
-    # trains once and serves many queries.
-    cache_key = (id(corpus.sparkSession), id(corpus), corpus_id, vec_col, n_centroids, seed)
-    hit = _IVF_MODEL_CACHE.get(cache_key)
-    if hit is not None and hit[0] is corpus:
-        model = hit[1]
-    else:
+    # fitted model per (corpus plan, params) so repeated probes against
+    # the same corpus skip the distributed KMeans fit (~2 s of a ~2.7 s
+    # query at sf0.1); production FAISS-style IVF likewise trains once
+    # and serves many queries.
+    def fit():
         km = KMeans(k=n_centroids, seed=seed, featuresCol="_fv", predictionCol="_cell")
-        model = km.fit(feats)
-        if len(_IVF_MODEL_CACHE) >= 16:
-            _IVF_MODEL_CACHE.pop(next(iter(_IVF_MODEL_CACHE)))
-        _IVF_MODEL_CACHE[cache_key] = (corpus, model)
+        return km.fit(feats)
+
+    model = _IVF_MODEL_CACHE.get_or_build(corpus, (corpus_id, vec_col, n_centroids, seed), fit)
     # r13: fan the assigned corpus across the cores AFTER the fit (the
     # k-means|| init samples by partition, so the model must see the
     # original layout) — the broadcast probe join otherwise scores all
@@ -315,7 +308,7 @@ def lsh_topk(
     # r13: cosine_similarity() recomputed BOTH norms per candidate PAIR
     # through the interpreted HOF fold (~4·dim evals/pair); norms are
     # per-vector quantities — stage them per side and run the pair dot
-    # through the bit-exact Arrow kernel. Same values: the norm
+    # through the bit-exact dot_seq. Same values: the norm
     # expression is unchanged (just evaluated once per vector), the dot
     # is dot()'s exact left-to-right chain, the zero-norm guard is the
     # same den != 0.
@@ -341,9 +334,9 @@ def lsh_topk(
     )
 
 
-# (corpus-pin, codebooks ndarray) per (session, corpus, params) — PQ
-# codebooks are corpus state like the IVF quantizer; bounded FIFO.
-_PQ_MODEL_CACHE: dict[tuple, tuple] = {}
+# codebooks ndarray per (corpus, params) — PQ codebooks are corpus
+# state like the IVF quantizer
+_PQ_MODEL_CACHE = Memo(16)
 
 
 def _pq_train_codebooks(
@@ -424,13 +417,8 @@ def pq_topk(
     import pyspark.sql.types as T
 
     spark = corpus.sparkSession
-    cache_key = (
-        id(spark), id(corpus), corpus_id, vec_col, m, n_codes, train_sample, seed
-    )
-    hit = _PQ_MODEL_CACHE.get(cache_key)
-    if hit is not None and hit[0] is corpus:
-        books = hit[1]
-    else:
+
+    def train() -> np.ndarray | None:
         sample_rows = (
             corpus.select(vec_col)
             .where(F.col(vec_col).isNotNull())
@@ -438,21 +426,24 @@ def pq_topk(
             .collect()
         )
         if not sample_rows:
-            return spark.createDataFrame(
-                [],
-                f"{probe_id} {probes.schema[probe_id].dataType.simpleString()}, "
-                f"{corpus_id} {corpus.schema[corpus_id].dataType.simpleString()}, "
-                "cosine double, rnk int",
-            )
+            return None  # empty corpus: not cached
         samples = np.asarray([r[0] for r in sample_rows], dtype=np.float64)
         if samples.shape[1] % m != 0:
             raise ValueError(
                 f"pq_topk: dim {samples.shape[1]} not divisible by m={m}"
             )
-        books = _pq_train_codebooks(samples, m, n_codes, seed)
-        if len(_PQ_MODEL_CACHE) >= 16:
-            _PQ_MODEL_CACHE.pop(next(iter(_PQ_MODEL_CACHE)))
-        _PQ_MODEL_CACHE[cache_key] = (corpus, books)
+        return _pq_train_codebooks(samples, m, n_codes, seed)
+
+    books = _PQ_MODEL_CACHE.get_or_build(
+        corpus, (corpus_id, vec_col, m, n_codes, train_sample, seed), train
+    )
+    if books is None:
+        return spark.createDataFrame(
+            [],
+            f"{probe_id} {probes.schema[probe_id].dataType.simpleString()}, "
+            f"{corpus_id} {corpus.schema[corpus_id].dataType.simpleString()}, "
+            "cosine double, rnk int",
+        )
 
     sub = books.shape[2]
 

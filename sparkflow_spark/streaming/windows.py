@@ -10,6 +10,7 @@ import pyspark.sql.functions as F
 from pyspark.sql import DataFrame, SparkSession
 
 from sparkflow_spark.catalog import normalize_event_time, table_path
+from sparkflow_spark.memo import Memo
 from sparkflow_spark.session import ensure_runtime_configs
 
 
@@ -29,8 +30,8 @@ def _as_stream_dir(path: str) -> str:
     return d
 
 
-_SESSION_CLONES: dict[tuple[int, int], tuple[SparkSession, SparkSession]] = {}
-_SCHEMA_CACHE: dict[tuple[int, str], tuple[SparkSession, object]] = {}
+_SESSION_CLONES = Memo(32)
+_SCHEMA_CACHE = Memo(64)
 
 
 def streaming_session(
@@ -75,23 +76,18 @@ def streaming_session(
     """
     if state_partitions is None:
         return ensure_runtime_configs(spark)
-    key = (id(spark), state_partitions, no_data_batches)
-    hit = _SESSION_CLONES.get(key)
-    if hit is not None and hit[0] is spark:
-        return hit[1]
-    runner = spark.newSession()
-    ensure_runtime_configs(runner)
-    runner.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-    if not no_data_batches:
-        runner.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+
+    def clone() -> SparkSession:
+        runner = ensure_runtime_configs(spark.newSession())
+        runner.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
+        if not no_data_batches:
+            runner.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+        return runner
+
     # memoized per (parent, width): the clone itself is stateless (each
     # query gets its own checkpoint/sink), but building one costs a
-    # newSession + ~a dozen conf py4j round-trips per call. The parent
-    # is pinned in the value so a GC'd session's id can't alias.
-    if len(_SESSION_CLONES) >= 32:
-        _SESSION_CLONES.pop(next(iter(_SESSION_CLONES)))
-    _SESSION_CLONES[key] = (spark, runner)
-    return runner
+    # newSession + ~a dozen conf py4j round-trips per call
+    return _SESSION_CLONES.get_or_build(spark, (state_partitions, no_data_batches), clone)
 
 
 def stream_events(
@@ -123,15 +119,9 @@ def stream_events(
     # ltz) and normalize_event_time converts below; the catalog's
     # cached events table is already normalized and would mis-declare
     # a bigint-nanos fixture.
-    skey = (id(spark), path)
-    hit = _SCHEMA_CACHE.get(skey)
-    if hit is not None and hit[0] is spark:
-        batch_schema = hit[1]
-    else:
-        batch_schema = spark.read.parquet(path).schema
-        if len(_SCHEMA_CACHE) >= 64:
-            _SCHEMA_CACHE.pop(next(iter(_SCHEMA_CACHE)))
-        _SCHEMA_CACHE[skey] = (spark, batch_schema)
+    batch_schema = _SCHEMA_CACHE.get_or_build(
+        spark, (path,), lambda: spark.read.parquet(path).schema
+    )
     reader = spark.readStream.schema(batch_schema)
     if max_files_per_trigger is not None:
         # one micro-batch per N source files — the way to exercise real

@@ -1,9 +1,10 @@
 """Round-13 OPTIMIZATION parity pins.
 
 The optimization round swaps interpreted higher-order-function kernels
-for Arrow-batched numpy twins on hot pair-scoring paths. Every swap is
-only legal if the twin is BIT-IDENTICAL on real data — these tests pin
-that, so oracle hashes cannot drift.
+for faster twins on hot paths (the codegen'd unrolled dot_seq, the
+protobuf wire fast path). Every swap is only legal if the twin is
+BIT-IDENTICAL on real data — these tests pin that, so oracle hashes
+cannot drift.
 """
 
 from __future__ import annotations
@@ -21,12 +22,12 @@ EDGE_ROWS = [
     # plain
     ([1.0, 2.0, 3.0], [4.0, 5.0, 6.0]),
     # negative-zero products: fold starts at +0.0, so an all-(-0.0)
-    # product chain must come out +0.0 — the seed the batched kernel
-    # must reproduce (acc starts at np.zeros, not the first product)
+    # product chain must come out +0.0 — the seed the unrolled chain
+    # must reproduce (it starts at lit(0.0), not the first product)
     ([-1.0, -2.0], [0.0, 0.0]),
     ([0.0, -0.0], [-5.0, 7.0]),
     # cancellation / rounding-order sensitivity: results depend on the
-    # exact add order, which is what the kernel must replicate
+    # exact add order, which is what the twin must replicate
     ([1e16, 1.0, -1e16], [1.0, 1.0, 1.0]),
     ([0.1] * 64, [0.3] * 64),
     # empty arrays → 0.0 (fold over nothing)
@@ -39,20 +40,6 @@ EDGE_ROWS = [
     # null element → NULL
     ([1.0, None, 3.0], [1.0, 2.0, 3.0]),
 ]
-
-
-def test_dot_seq_batched_bit_identical_on_edges(spark):
-    from sparkflow_spark.functions.vector import dot, dot_seq_batched
-
-    df = _pairs_df(spark, EDGE_ROWS)
-    out = df.select(
-        dot("a", "b").alias("ref"), dot_seq_batched("a", "b").alias("fast")
-    ).collect()
-    for r in out:
-        # exact bitwise comparison: repr of the double, or both NULL
-        assert (r["ref"] is None) == (r["fast"] is None), r
-        if r["ref"] is not None:
-            assert repr(r["ref"]) == repr(r["fast"]), r
 
 
 def test_dot_seq_unrolled_bit_identical_on_edges(spark):
@@ -116,28 +103,6 @@ def test_sem_pairs_staged_norm_bit_identical(spark, sf_dir):
     )
     diff = emb.select(
         old.alias("ref"), F.sqrt(dot_seq("v", "v")).alias("fast")
-    ).where(~F.col("ref").eqNullSafe(F.col("fast")))
-    assert diff.count() == 0
-
-
-def test_dot_seq_batched_bit_identical_on_fixture_embeddings(spark, sf_dir):
-    """Every (probe, corpus) pair of the first 20 embeddings × the whole
-    corpus — the exact pair-stream shape the hard-negative family and
-    the IVF re-rank score, compared value-for-value with strict
-    equality (no tolerance)."""
-    from sparkflow_spark.catalog import Tables
-    from sparkflow_spark.functions.vector import dot, dot_seq_batched
-
-    t = Tables(spark, sf_dir)
-    p = (
-        t.embeddings.orderBy("vec_id")
-        .limit(20)
-        .select(F.col("vec_id").alias("pid"), F.col("embedding").alias("pvec"))
-    )
-    pairs = t.embeddings.join(F.broadcast(p), F.col("vec_id") != F.col("pid"))
-    diff = pairs.select(
-        dot("pvec", "embedding").alias("ref"),
-        dot_seq_batched("pvec", "embedding").alias("fast"),
     ).where(~F.col("ref").eqNullSafe(F.col("fast")))
     assert diff.count() == 0
 

@@ -300,31 +300,31 @@ def test_asof_join_directions_match_pandas(spark):
             )
 
 
-def test_ngram_arrow_expansion_equals_hof(spark, sf_dir):
-    """The Arrow pair-expansion kernel (the default since r9 — the HOF
-    form's 4-pass C2 warmup was the r8 'in-session edge') must produce
-    the IDENTICAL pair set, jaccard for jaccard, as the Catalyst HOF
-    definitional form, at a threshold loose enough to exercise the
-    size-ratio prune on both sides."""
+def test_ngram_capped_expansion_equals_uncapped(spark, sf_dir):
+    """The capped path's Arrow pair-expansion kernel, capped at the
+    corpus size (no shingle's document frequency exceeds it, so the cap
+    drops nothing), must produce the IDENTICAL pair
+    set, jaccard for jaccard, as the uncapped self-join path, at a
+    threshold loose enough to exercise the size-ratio prune."""
     from sparkflow_spark.dedup import ngram_jaccard_pairs
 
     df = spark.read.parquet(f"{sf_dir}/documents.parquet")
-    kw = dict(threshold=0.5, max_shingle_freq=20)
-    arrow = {
+    n_docs = df.count()
+    capped = {
         (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-        for r in ngram_jaccard_pairs(df, expansion="arrow", **kw).collect()
+        for r in ngram_jaccard_pairs(df, threshold=0.5, max_shingle_freq=n_docs).collect()
     }
-    hof = {
+    uncapped = {
         (r["id_a"], r["id_b"]): round(r["jaccard"], 9)
-        for r in ngram_jaccard_pairs(df, expansion="hof", **kw).collect()
+        for r in ngram_jaccard_pairs(df, threshold=0.5, max_shingle_freq=None).collect()
     }
-    assert arrow == hof and len(arrow) > 0
+    assert capped == uncapped and len(capped) > 0
 
 
-def test_ngram_arrow_expansion_string_ids(spark):
+def test_ngram_capped_expansion_string_ids(spark):
     """The Arrow expansion derives its output id type from the input
     (schema string built from df.schema[id_col]) — string doc ids must
-    flow through and match the HOF form."""
+    flow through and match the uncapped self-join path."""
     from sparkflow_spark.dedup import ngram_jaccard_pairs
 
     rows = [
@@ -333,15 +333,15 @@ def test_ngram_arrow_expansion_string_ids(spark):
         ("c", "completely different text with no shared shingles at all"),
     ]
     df = spark.createDataFrame(rows, "doc_id string, text string")
-    kw = dict(threshold=0.5, max_shingle_freq=20)
-    arrow = {
-        (r["id_a"], r["id_b"]) for r in ngram_jaccard_pairs(df, **kw).collect()
-    }
-    hof = {
+    capped = {
         (r["id_a"], r["id_b"])
-        for r in ngram_jaccard_pairs(df, expansion="hof", **kw).collect()
+        for r in ngram_jaccard_pairs(df, threshold=0.5, max_shingle_freq=len(rows)).collect()
     }
-    assert arrow == hof == {("a", "b")}
+    uncapped = {
+        (r["id_a"], r["id_b"])
+        for r in ngram_jaccard_pairs(df, threshold=0.5, max_shingle_freq=None).collect()
+    }
+    assert capped == uncapped == {("a", "b")}
 
 
 def test_rrf_fusion_scores_recompute_from_leg_ranks(spark, sf_dir):
