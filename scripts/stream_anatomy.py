@@ -1,12 +1,13 @@
 #!/usr/bin/env python
 """Per-batch anatomy of the streaming entries (r14, guide §1).
 
-Monkeypatches windows.run_stream_to_memory to capture every completed
-batch's StreamingQueryProgress (durationMs breakdown: queryPlanning,
-addBatch, getBatch, walCommit/commitOffsets, triggerExecution;
-numInputRows; stateOperators commit/total-rows) while running the
-REGISTRY entry unchanged, then prints per-entry: wall seconds per pass,
-batch count, empty-batch count, and the durationMs sums.
+Runs each REGISTRY entry unchanged, keeping every query it starts
+through the real windows.run_stream_to_memory (a DataStreamWriter.start
+hook), and reads each completed batch's StreamingQueryProgress
+(durationMs breakdown: queryPlanning, addBatch, getBatch,
+walCommit/commitOffsets, triggerExecution; numInputRows; stateOperators
+commit/total-rows). Prints per entry: wall seconds per pass, batch
+count, empty-batch count, and the durationMs sums.
 
 Usage: python scripts/stream_anatomy.py entry1,entry2 [--passes N] [--sf DIR] [--json OUT]
 """
@@ -21,9 +22,10 @@ import time
 
 sys.path.insert(0, os.path.dirname(os.path.dirname(os.path.abspath(__file__))))
 
+from pyspark.sql.streaming.readwriter import DataStreamWriter
+
 from sparkflow_spark.queries import load_all
 from sparkflow_spark.session import build_session
-from sparkflow_spark.streaming import windows
 
 
 def main() -> int:
@@ -34,63 +36,16 @@ def main() -> int:
     ap.add_argument("--json", dest="json_out", default=None)
     args = ap.parse_args()
 
-    captured: list[list[dict]] = []
-    orig = windows.run_stream_to_memory
+    # every query the real run_stream_to_memory starts, in start order
+    started: list = []
+    orig_start = DataStreamWriter.start
 
-    def wrapped(sdf, output_mode, **kw):
-        # same body as the original, but keep the query handle so we can
-        # read recentProgress after it stops
-        import uuid as _uuid
+    def recording_start(self, *a, **kw):
+        query = orig_start(self, *a, **kw)
+        started.append(query)
+        return query
 
-        spark = sdf.sparkSession
-        name = f"st_{_uuid.uuid4().hex[:12]}"
-        q = (
-            sdf.writeStream.format("memory")
-            .queryName(name)
-            .outputMode(output_mode)
-            .trigger(availableNow=True)
-            .start()
-        )
-        drain = kw.get("drain", "terminate")
-        if drain == "terminate":
-            q.awaitTermination()
-        else:
-            deadline = time.time() + kw.get("settle_timeout", 60.0)
-            last_pid, last_count, empty_quiet = None, -1, 0
-            need = kw.get("settle_quiet_batches", 2)
-            while time.time() < deadline:
-                prog = q.lastProgress
-                if prog is not None and prog["batchId"] != last_pid:
-                    n = spark.table(name).count()
-                    if prog["numInputRows"] == 0 and n == last_count:
-                        empty_quiet += 1
-                    else:
-                        empty_quiet = 0
-                    last_pid, last_count = prog["batchId"], n
-                    if empty_quiet >= need:
-                        break
-                time.sleep(kw.get("settle_secs", 0.1))
-            q.stop()
-            q.awaitTermination()
-        captured.append([dict(p.asDict()) if hasattr(p, "asDict") else p for p in []])
-        # recentProgress returns JSON strings in some versions; normalize
-        progs = []
-        for p in q.recentProgress:
-            if isinstance(p, str):
-                progs.append(json.loads(p))
-            else:
-                try:
-                    progs.append(json.loads(p.json))
-                except Exception:
-                    progs.append({})
-        captured[-1] = progs
-        return spark.table(name)
-
-    windows.run_stream_to_memory = wrapped
-    # stateful.py imported run_stream_to_memory by name at module import
-    from sparkflow_spark.streaming import stateful
-
-    stateful.run_stream_to_memory = wrapped
+    DataStreamWriter.start = recording_start
 
     spark = build_session(app_name="stream_anatomy")
     spark.sparkContext.setLogLevel("ERROR")
@@ -108,32 +63,27 @@ def main() -> int:
         q = registry[name]
         rows = []
         for i in range(args.passes):
-            captured.clear()
+            started.clear()
             t0 = time.perf_counter()
             execute(q.fn(spark, args.sf))
             wall = round(time.perf_counter() - t0, 3)
             runs = []
-            for progs in captured:
+            for query in started:
                 batches = []
-                for p in progs:
-                    d = p.get("durationMs", {})
-                    so = p.get("stateOperators", [])
+                for p in query.recentProgress:
+                    d = p.durationMs
                     batches.append(
                         {
-                            "batchId": p.get("batchId"),
-                            "rows": p.get("numInputRows"),
+                            "batchId": p.batchId,
+                            "rows": p.numInputRows,
                             "triggerExecution": d.get("triggerExecution"),
                             "queryPlanning": d.get("queryPlanning"),
                             "addBatch": d.get("addBatch"),
                             "getBatch": d.get("getBatch"),
                             "walCommit": d.get("walCommit"),
                             "commitOffsets": d.get("commitOffsets"),
-                            "stateCommitMs": sum(
-                                s.get("commitTimeMs", 0) for s in so
-                            ),
-                            "stateRowsTotal": sum(
-                                s.get("numRowsTotal", 0) for s in so
-                            ),
+                            "stateCommitMs": sum(s.commitTimeMs for s in p.stateOperators),
+                            "stateRowsTotal": sum(s.numRowsTotal for s in p.stateOperators),
                         }
                     )
                 runs.append(batches)
@@ -152,8 +102,7 @@ def main() -> int:
                 flush=True,
             )
         out[name] = {"passes": rows}
-    windows.run_stream_to_memory = orig
-    stateful.run_stream_to_memory = orig
+    DataStreamWriter.start = orig_start
     if args.json_out:
         with open(args.json_out, "w") as f:
             json.dump(out, f, indent=1)

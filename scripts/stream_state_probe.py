@@ -48,12 +48,16 @@ def tws_state_footprint(spark, sf_dir: str, width: int | None = None) -> dict:
     import pyspark.sql.functions as F  # noqa: F401
 
     from sparkflow_spark.streaming import stateful
-    from sparkflow_spark.streaming.windows import stream_events
+    from sparkflow_spark.streaming.windows import _session_clone, stream_events
 
     proc = stateful._build_user_stats_processor()
     runner = stateful._tws_runner_session(spark)
     if width is not None:
-        runner.conf.set("spark.sql.shuffle.partitions", str(width))
+        # its own clone (the later width override wins), so the shared
+        # TWS runner keeps its fixture width
+        runner = _session_clone(
+            spark, (*stateful._TWS_CONFS, ("spark.sql.shuffle.partitions", str(width)))
+        )
     sdf = stream_events(runner, sf_dir, watermark=None, state_partitions=None)
     stats = sdf.groupBy("user_id").transformWithStateInPandas(
         statefulProcessor=proc,

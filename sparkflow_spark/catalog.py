@@ -90,7 +90,7 @@ def normalize_event_time(df: DataFrame, col: str = "ts") -> DataFrame:
 
 
 # (session, sf_dir) pairs whose scan parallelism was already tuned.
-_SCAN_TUNED: set[tuple[int, str]] = set()
+_SCAN_TUNED = Memo(1024)
 
 
 def tune_scan_parallelism(spark: SparkSession, sf_dir: str) -> None:
@@ -108,23 +108,24 @@ def tune_scan_parallelism(spark: SparkSession, sf_dir: str) -> None:
     is read at physical-planning time, so cached scans pick it up on
     their next execution.
     """
-    key = (id(spark), sf_dir)
-    if key in _SCAN_TUNED:
-        return
-    try:
-        total = sum(
-            os.path.getsize(p)
-            for n in TABLE_NAMES
-            if os.path.exists(p := table_path(sf_dir, n))
-        )
-        cores = spark.sparkContext.defaultParallelism
-        target = max(1 << 20, min(128 << 20, total // max(1, cores * 3)))
-        spark.conf.set("spark.sql.files.maxPartitionBytes", str(target))
-    except Exception:
-        # tuning knob only — never fail a read over it (e.g. an
-        # object-store path os.path can't stat)
-        pass
-    _SCAN_TUNED.add(key)
+
+    def tune() -> bool:
+        try:
+            total = sum(
+                os.path.getsize(p)
+                for n in TABLE_NAMES
+                if os.path.exists(p := table_path(sf_dir, n))
+            )
+            cores = spark.sparkContext.defaultParallelism
+            target = max(1 << 20, min(128 << 20, total // max(1, cores * 3)))
+            spark.conf.set("spark.sql.files.maxPartitionBytes", str(target))
+        except Exception:
+            # tuning knob only — never fail a read over it (e.g. an
+            # object-store path os.path can't stat)
+            pass
+        return True  # the stored "tuned" marker (a None build is not stored)
+
+    _SCAN_TUNED.get_or_build(spark, (sf_dir,), tune)
 
 
 def fan_out(df: DataFrame, per_core: int = 1) -> DataFrame:

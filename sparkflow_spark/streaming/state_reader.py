@@ -71,39 +71,26 @@ def tws_user_stats_state_audit(spark: SparkSession, sf_dir: str) -> DataFrame:
     batch scan.
     """
     import shutil
+    import uuid
+
+    import pyspark.sql.functions as F
 
     from sparkflow_spark.catalog import warehouse_subdir
-    from sparkflow_spark.streaming.stateful import (
-        _build_user_stats_processor,
-        _TWS_OUT_SCHEMA,
-        _tws_runner_session,
-    )
-    from sparkflow_spark.streaming.windows import stream_events
+    from sparkflow_spark.streaming.stateful import _user_stats_stream
 
     ck = warehouse_subdir(spark, "statestore_audit_ck", key=sf_dir)
     shutil.rmtree(ck, ignore_errors=True)
-    runner = _tws_runner_session(spark)
-    sdf = stream_events(runner, sf_dir, watermark=None, state_partitions=None)
-    stats = sdf.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_build_user_stats_processor(),
-        outputStructType=_TWS_OUT_SCHEMA,
-        outputMode="update",
-        timeMode="none",
-    )
-    import uuid as _uuid
-
+    stats = _user_stats_stream(spark, sf_dir)
     q = (
         stats.writeStream.format("memory")
-        .queryName(f"ss_audit_{_uuid.uuid4().hex[:10]}")
+        .queryName(f"ss_audit_{uuid.uuid4().hex[:10]}")
         .option("checkpointLocation", ck)
         .outputMode("update")
         .trigger(availableNow=True)
         .start()
     )
     q.awaitTermination()
-    import pyspark.sql.functions as F
-
-    store = read_state_store(runner, ck, state_var="stats")
+    store = read_state_store(stats.sparkSession, ck, state_var="stats")
     return store.select(
         F.col("key.user_id").alias("user_id"),
         F.col("value.c").alias("c"),

@@ -15,11 +15,12 @@ from collections.abc import Iterator
 from typing import Any
 
 import pandas as pd
+import pyspark.sql.functions as F
 import pyspark.sql.types as T
-from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql import DataFrame, SparkSession, Window
 from pyspark.sql.streaming.state import GroupState, GroupStateTimeout
 
-from sparkflow_spark.streaming.windows import run_stream_to_memory, stream_events
+from sparkflow_spark.streaming.windows import _session_clone, run_stream_to_memory, stream_events
 
 
 def _ensure_protobuf() -> None:
@@ -33,7 +34,7 @@ def _ensure_protobuf() -> None:
     as an import side effect would hand every other library in the
     process a partial ``google.protobuf`` it never asked for. Executor
     workers are covered separately by the processors' ``__setstate__``
-    bootstrap (see :func:`_minipb_bootstrap_closure`). With the real
+    bootstrap (see :func:`_processor_base`). With the real
     wheel installed this is a no-op and the official runtime wins.
     """
     from sparkflow_spark.minipb import install_if_missing
@@ -68,8 +69,6 @@ def running_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     )
     out = run_stream_to_memory(counts, "update")
     # one emission per key per micro-batch; keep the final (max) total
-    import pyspark.sql.functions as F
-
     return out.groupBy("user_id").agg(F.max("c").alias("c")).orderBy("user_id")
 
 
@@ -86,54 +85,88 @@ _TWS_OUT_SCHEMA = T.StructType(
 )
 
 
-def _minipb_bootstrap_closure():
-    """A by-value-picklable zero-dependency bootstrap: embeds the
-    SOURCE of :mod:`sparkflow_spark.minipb` in its closure and installs
-    it as ``google.protobuf`` when the real wheel is absent. Shared by
-    every TWS processor builder below — their ``__setstate__`` calls it
-    at unpickle time, before the worker's first protobuf-framed
-    state-server message."""
+def _processor_base() -> type:
+    """A ``StatefulProcessor`` base class that ships BY VALUE.
+
+    The TWS "driver worker" is a separate python process the JVM spawns
+    with only pyspark.zip on its path — it gets neither the repo cwd
+    nor the addPyFile package zip, so anything pickled by REFERENCE to
+    ``sparkflow_spark`` dies there with ModuleNotFoundError at
+    ``read_command``. The class below, and every processor subclassing
+    it inside a builder function, is local to a function, so cloudpickle
+    ships it by value (methods, closure and all); processor bodies
+    import only pandas/numpy/stdlib.
+
+    The closure embeds the SOURCE of :mod:`sparkflow_spark.minipb`:
+    ``__setstate__`` runs at unpickle time — before the worker's first
+    protobuf-framed state-server message — and installs it as
+    ``google.protobuf`` if the real wheel is absent there (the
+    constructor plants a marker attribute so pickle always calls
+    ``__setstate__``). The state-v2 handlers a processor does not use
+    are no-ops here.
+    """
     import inspect
+
+    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
     import sparkflow_spark.minipb as _minipb_mod
 
     minipb_src = inspect.getsource(_minipb_mod)
 
-    def _bootstrap_protobuf() -> None:
-        import types as _types
+    class TwsProcessor(StatefulProcessor):
+        def __init__(self):
+            # non-empty instance state → pickle invokes __setstate__
+            self._minipb_bootstrap = True
 
-        try:
-            import google.protobuf as _g
+        def __setstate__(self, state):
+            import types as _types
 
-            if getattr(_g, "__file__", None) is not None or getattr(
-                _g, "_MINIPB", False
-            ):
-                return
-        except ImportError:
+            try:
+                import google.protobuf as _g
+
+                installed = getattr(_g, "__file__", None) is not None or getattr(
+                    _g, "_MINIPB", False
+                )
+            except ImportError:
+                installed = False
+            if not installed:
+                mod = _types.ModuleType("sparkflow_minipb_embedded")
+                exec(compile(minipb_src, "<sparkflow minipb embedded>", "exec"), mod.__dict__)
+                mod.install_if_missing()
+            self.__dict__.update(state or {})
+
+        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
+            return iter(())
+
+        def handleInitialState(self, key, initialState, timerValues) -> None:
             pass
-        mod = _types.ModuleType("sparkflow_minipb_embedded")
-        exec(compile(minipb_src, "<sparkflow minipb embedded>", "exec"), mod.__dict__)
-        mod.install_if_missing()
 
-    return _bootstrap_protobuf
+        def close(self) -> None:
+            pass
+
+    return TwsProcessor
+
+
+_TWS_CONFS = (
+    ("spark.sql.shuffle.partitions", "4"),
+    (
+        "spark.sql.streaming.stateStore.providerClass",
+        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
+    ),
+)
 
 
 def _tws_runner_session(spark: SparkSession, no_data_batches: bool = True):
-    """Dedicated session clone for a TWS query: RocksDB state store
-    (TWS state lives in per-variable column families, which the default
+    """Session clone for a TWS query: RocksDB state store (TWS state
+    lives in per-variable column families, which the default
     HDFS-backed provider rejects — RocksDB is also the production
     store) + fixture-sized state width. The clone keeps the provider
-    override from leaking into sibling queries.
+    override from leaking into sibling queries, and comes from the
+    :func:`streaming_session` clone store, so every TWS entry/pass
+    reuses the warm Python TWS workers and state-server processes
+    (measured ~2-4 s of fixed per-call cost for a fresh clone).
 
-    r13: memoized per base session (the streaming_session pattern) —
-    a fresh clone per CALL meant every TWS entry/pass spawned new
-    Python TWS workers and state-server processes instead of reusing
-    the warm ones (``spark.python.worker.reuse`` is per session);
-    measured ~2-4 s of fixed per-call cost. The clone is stateless
-    across queries: each run gets its own checkpoint dir and uniquely
-    named memory sink.
-
-    r14: ``no_data_batches=False`` returns a SECOND memoized clone with
+    ``no_data_batches=False`` adds
     ``spark.sql.streaming.noDataMicroBatches.enabled=false`` — for
     processors that never register timers, a processingTime-mode
     AvailableNow run then ends at its last DATA batch and
@@ -142,61 +175,27 @@ def _tws_runner_session(spark: SparkSession, no_data_batches: bool = True):
     not needed at all). Timer-driven processors must NOT use it —
     their timers fire in exactly the post-data batches this removes."""
     _ensure_protobuf()  # every TWS query builder funnels through here
-    from sparkflow_spark.session import ensure_runtime_configs
+    return _session_clone(spark, _TWS_CONFS, no_data_batches)
 
-    attr = "_sfl_tws_runner" if no_data_batches else "_sfl_tws_runner_nodnb"
-    runner = getattr(spark, attr, None)
-    if runner is not None:
-        return runner
-    runner = ensure_runtime_configs(spark.newSession())
-    runner.conf.set("spark.sql.shuffle.partitions", "4")
-    runner.conf.set(
-        "spark.sql.streaming.stateStore.providerClass",
-        "org.apache.spark.sql.execution.streaming.state.RocksDBStateStoreProvider",
-    )
-    if not no_data_batches:
-        runner.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
-    setattr(spark, attr, runner)
-    return runner
+
+def _final_emission(out: DataFrame, order_col: str, *cols: str) -> DataFrame:
+    """Each user's FINAL emission: the row with the highest
+    ``order_col``, which must be strictly increasing per key across
+    micro-batches."""
+    w = Window.partitionBy("user_id").orderBy(F.col(order_col).desc())
+    return out.withColumn("_rn", F.row_number().over(w)).filter(F.col("_rn") == 1).select(*cols)
 
 
 def _build_user_stats_processor():
-    """Build a FULLY SELF-CONTAINED StatefulProcessor instance.
-
-    The TWS "driver worker" is a separate python process the JVM spawns
-    with only pyspark.zip on its path — it gets neither the repo cwd
-    nor the addPyFile package zip, so anything pickled by REFERENCE to
-    ``sparkflow_spark`` dies there with ModuleNotFoundError at
-    ``read_command``. The class below is defined inside this function,
-    so cloudpickle ships it BY VALUE (methods, closure and all); its
-    only imports are pandas/numpy/stdlib.
-
-    The closure also embeds the SOURCE of :mod:`sparkflow_spark.minipb`
-    as a string: ``__setstate__`` runs at unpickle time — before the
-    worker's first protobuf-framed state-server message — and installs
-    the runtime if ``google.protobuf`` is absent there (the constructor
-    plants a marker attribute so pickle always calls ``__setstate__``).
-
-    Semantics: (count, sum-in-integer-cents) per user. Cents keep the
-    running sum EXACT and order-independent — the final emission is
-    bit-comparable to a batch GROUP BY regardless of micro-batch
-    arrival order. State is two longs per key: bounded by key
-    cardinality, with getValueState's ttlDurationMs as the production
-    expiry knob.
+    """The user-stats processor instance: (count, sum-in-integer-cents)
+    per user. Cents keep the running sum EXACT and order-independent —
+    the final emission is bit-comparable to a batch GROUP BY regardless
+    of micro-batch arrival order. State is two longs per key: bounded
+    by key cardinality, with getValueState's ttlDurationMs as the
+    production expiry knob.
     """
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
-    _bootstrap_protobuf = _minipb_bootstrap_closure()
-
-    class UserStatsProcessor(StatefulProcessor):
-        def __init__(self):
-            # non-empty instance state → pickle invokes __setstate__
-            self._minipb_bootstrap = True
-
-        def __setstate__(self, state):
-            _bootstrap_protobuf()
-            self.__dict__.update(state or {})
-
+    class UserStatsProcessor(_processor_base()):
         def init(self, handle) -> None:
             self._state = handle.getValueState("stats", "c LONG, sum_cents LONG")
 
@@ -212,15 +211,6 @@ def _build_user_stats_processor():
                 cents += int(np.floor(v * 100 + 0.5).sum())
             self._state.update((c, cents))
             yield _pd.DataFrame({"user_id": [key[0]], "c": [c], "sum_cents": [cents]})
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            return iter(())
-
-        def handleInitialState(self, key, initialState, timerValues) -> None:
-            pass
-
-        def close(self) -> None:
-            pass
 
     return UserStatsProcessor()
 
@@ -258,6 +248,18 @@ def _protobuf_requirement() -> str:
     return "protobuf>=6.33.0,<7"  # pragma: no cover
 
 
+def _user_stats_stream(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """The per-user (count, sum_cents) TWS stream over the events,
+    bound to the TWS runner clone (its ``sparkSession``)."""
+    sdf = stream_events(_tws_runner_session(spark), sf_dir, watermark=None, state_partitions=None)
+    return sdf.groupBy("user_id").transformWithStateInPandas(
+        statefulProcessor=_build_user_stats_processor(),
+        outputStructType=_TWS_OUT_SCHEMA,
+        outputMode="update",
+        timeMode="none",
+    )
+
+
 def running_user_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Per-user running (count, sum) via ``transformWithStateInPandas``
     — the Spark 4 state-v2 API (typed state handles, timers, TTL),
@@ -280,27 +282,9 @@ def running_user_stats_tws(spark: SparkSession, sf_dir: str) -> DataFrame:
             f"(`pip install '{_protobuf_requirement()}'`) and the bundled "
             "minipb fallback failed to install."
         ) from exc
-    proc = _build_user_stats_processor()
-    runner = _tws_runner_session(spark)
-    sdf = stream_events(runner, sf_dir, watermark=None, state_partitions=None)
-    stats = sdf.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=proc,
-        outputStructType=_TWS_OUT_SCHEMA,
-        outputMode="update",
-        timeMode="none",
-    )
-    out = run_stream_to_memory(stats, "update")
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    # keep the final (highest-count) emission per key: every emission
-    # for a key strictly increases c, so max-c IS the final state
-    w = Window.partitionBy("user_id").orderBy(F.col("c").desc())
-    return (
-        out.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("user_id", "c", "sum_cents")
-    )
+    out = run_stream_to_memory(_user_stats_stream(spark, sf_dir), "update")
+    # every emission for a key strictly increases c
+    return _final_emission(out, "c", "user_id", "c", "sum_cents")
 
 
 _TWS_LIST_SCHEMA = T.StructType(
@@ -326,18 +310,8 @@ def tws_last_events_list_state(
     (ADVICE r10): each call merges the previously stored list with the
     new rows before re-ranking, so maxFilesPerTrigger / real streams
     converge to the same top-3 as the single-batch AvailableNow run."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
-    _bootstrap_protobuf = _minipb_bootstrap_closure()
-
-    class LastEventsProcessor(StatefulProcessor):
-        def __init__(self):
-            self._minipb_bootstrap = True
-
-        def __setstate__(self, state):
-            _bootstrap_protobuf()
-            self.__dict__.update(state or {})
-
+    class LastEventsProcessor(_processor_base()):
         def init(self, handle) -> None:
             self._last = handle.getListState(
                 "last_events", "ts_us LONG, event_id LONG, cents LONG"
@@ -381,15 +355,6 @@ def tws_last_events_list_state(
                 }
             )
 
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            return iter(())
-
-        def handleInitialState(self, key, initialState, timerValues) -> None:
-            pass
-
-        def close(self) -> None:
-            pass
-
     runner = _tws_runner_session(spark)
     sdf = stream_events(
         runner,
@@ -405,17 +370,7 @@ def tws_last_events_list_state(
         timeMode="none",
     )
     res = run_stream_to_memory(out, "update")
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    # the FINAL emission per key is the one with the highest n_seen
-    # (strictly monotone per key across micro-batches)
-    w = Window.partitionBy("user_id").orderBy(F.col("n_seen").desc())
-    return (
-        res.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("user_id", "n_kept", "top3_cents", "n_seen")
-    )
+    return _final_emission(res, "n_seen", "user_id", "n_kept", "top3_cents", "n_seen")
 
 
 _TWS_MAP_SCHEMA = T.StructType(
@@ -435,18 +390,8 @@ def tws_type_counts_map_state(spark: SparkSession, sf_dir: str) -> DataFrame:
     (UpdateValue / ContainsKey / GetValue / Iterator) of the protobuf
     runtime. Final emission per user == batch GROUP BY (user_id,
     event_type)."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
-    _bootstrap_protobuf = _minipb_bootstrap_closure()
-
-    class TypeCountsProcessor(StatefulProcessor):
-        def __init__(self):
-            self._minipb_bootstrap = True
-
-        def __setstate__(self, state):
-            _bootstrap_protobuf()
-            self.__dict__.update(state or {})
-
+    class TypeCountsProcessor(_processor_base()):
         def init(self, handle) -> None:
             self._counts = handle.getMapState("type_counts", "t STRING", "c LONG")
 
@@ -469,15 +414,6 @@ def tws_type_counts_map_state(spark: SparkSession, sf_dir: str) -> DataFrame:
                 {"user_id": [key[0]] * len(ks), "event_type": ks, "c": cs}
             )
 
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            return iter(())
-
-        def handleInitialState(self, key, initialState, timerValues) -> None:
-            pass
-
-        def close(self) -> None:
-            pass
-
     runner = _tws_runner_session(spark)
     sdf = stream_events(runner, sf_dir, watermark=None, state_partitions=None)
     out = sdf.groupBy("user_id").transformWithStateInPandas(
@@ -487,8 +423,6 @@ def tws_type_counts_map_state(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeMode="none",
     )
     res = run_stream_to_memory(out, "update")
-    import pyspark.sql.functions as F
-
     return res.groupBy("user_id", "event_type").agg(F.max("c").alias("c"))
 
 
@@ -512,26 +446,14 @@ def tws_session_end_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
     delay, floored to whole ms — users whose last event is younger keep
     their timer buffered (same watermark arithmetic the left-outer join
     entry pinned; the boundary inclusivity is pinned by t1)."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    _bootstrap_protobuf = _minipb_bootstrap_closure()
     gap_ms = 30 * 60 * 1000
 
-    class SessionTimerProcessor(StatefulProcessor):
-        def __init__(self):
-            self._minipb_bootstrap = True
-
-        def __setstate__(self, state):
-            _bootstrap_protobuf()
-            self.__dict__.update(state or {})
-
+    class SessionTimerProcessor(_processor_base()):
         def init(self, handle) -> None:
             self._handle = handle
             self._last_ts = handle.getValueState("last_ts", "ts_ms LONG")
 
         def handleInputRows(self, key, rows, timerValues):
-            import pandas as _pd
-
             mx = None
             for pdf in rows:
                 m = pdf["ts"].max()
@@ -555,12 +477,6 @@ def tws_session_end_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
                 }
             )
 
-        def handleInitialState(self, key, initialState, timerValues) -> None:
-            pass
-
-        def close(self) -> None:
-            pass
-
     runner = _tws_runner_session(spark)
     sdf = stream_events(runner, sf_dir, watermark="3 hours", state_partitions=None)
     out = sdf.groupBy("user_id").transformWithStateInPandas(
@@ -570,8 +486,6 @@ def tws_session_end_timers(spark: SparkSession, sf_dir: str) -> DataFrame:
         timeMode="eventtime",
     )
     res = run_stream_to_memory(out, "append")
-    import pyspark.sql.functions as F
-
     return res.select("user_id", "session_end_ms").orderBy("user_id")
 
 
@@ -589,20 +503,9 @@ def tws_seeded_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
     but never emit (update-mode emission rides handleInputRows) — the
     oracle reproduces exactly that: all-time counts for users active
     after the cutoff."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
     from sparkflow_spark.catalog import cached_table
 
-    _bootstrap_protobuf = _minipb_bootstrap_closure()
-
-    class SeededCountsProcessor(StatefulProcessor):
-        def __init__(self):
-            self._minipb_bootstrap = True
-
-        def __setstate__(self, state):
-            _bootstrap_protobuf()
-            self.__dict__.update(state or {})
-
+    class SeededCountsProcessor(_processor_base()):
         def init(self, handle) -> None:
             self._count = handle.getValueState("count", "c LONG")
 
@@ -619,15 +522,7 @@ def tws_seeded_user_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
             self._count.update((c,))
             yield _pd.DataFrame({"user_id": [key[0]], "c": [c]})
 
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            return iter(())
-
-        def close(self) -> None:
-            pass
-
     runner = _tws_runner_session(spark)
-    import pyspark.sql.functions as F
-
     seed = (
         cached_table(runner, sf_dir, "events")
         .where(F.col("ts") < F.lit(_TWS_SEED_CUTOFF).cast("timestamp"))
@@ -690,19 +585,9 @@ def tws_ttl_user_counts(
     per key is identifiable under expiry, where the count is not
     monotone.
     """
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    _bootstrap_protobuf = _minipb_bootstrap_closure()
     _ttl = int(ttl_ms)
 
-    class TtlCountsProcessor(StatefulProcessor):
-        def __init__(self):
-            self._minipb_bootstrap = True
-
-        def __setstate__(self, state):
-            _bootstrap_protobuf()
-            self.__dict__.update(state or {})
-
+    class TtlCountsProcessor(_processor_base()):
         def init(self, handle) -> None:
             self._count = handle.getValueState(
                 "cnt", "c LONG", ttlDurationMs=_ttl
@@ -723,15 +608,6 @@ def tws_ttl_user_counts(
                     "pt_ms": [timerValues.getCurrentProcessingTimeInMs()],
                 }
             )
-
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            return iter(())
-
-        def handleInitialState(self, key, initialState, timerValues) -> None:
-            pass
-
-        def close(self) -> None:
-            pass
 
     # r14 (guide §5 — the settle drain's empty micro-batches cost
     # 0.4-0.9 s of state-store load/commit each): this processor never
@@ -756,15 +632,7 @@ def tws_ttl_user_counts(
         timeMode="processingTime",  # TTL is only legal in this timeMode
     )
     res = run_stream_to_memory(out, "update")
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("pt_ms").desc())
-    return (
-        res.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("user_id", "c")
-    )
+    return _final_emission(res, "pt_ms", "user_id", "c")
 
 
 _TWS_PT_TIMER_SCHEMA = T.StructType(
@@ -790,18 +658,8 @@ def tws_processing_time_timer_fires(
     multi-file source: every key seen before the final batch).
     Duplicate registrations are prevented by a seen-marker ValueState.
     """
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
 
-    _bootstrap_protobuf = _minipb_bootstrap_closure()
-
-    class PtTimerProcessor(StatefulProcessor):
-        def __init__(self):
-            self._minipb_bootstrap = True
-
-        def __setstate__(self, state):
-            _bootstrap_protobuf()
-            self.__dict__.update(state or {})
-
+    class PtTimerProcessor(_processor_base()):
         def init(self, handle) -> None:
             self._handle = handle
             self._armed = handle.getValueState("armed", "a LONG")
@@ -826,12 +684,6 @@ def tws_processing_time_timer_fires(
                 }
             )
 
-        def handleInitialState(self, key, initialState, timerValues) -> None:
-            pass
-
-        def close(self) -> None:
-            pass
-
     runner = _tws_runner_session(spark)
     sdf = stream_events(
         runner,
@@ -848,14 +700,12 @@ def tws_processing_time_timer_fires(
     )
     # timers fire in the post-data empty batches that processingTime
     # mode keeps scheduling — settle-drain captures them, then stops.
-    # settle_quiet_batches=1 (r14): every timer here is already-elapsed
-    # at registration, every fired timer emits one row, and
-    # handleExpiredTimer registers no new timer — so the FIRST empty
+    # Stopping at the first quiet batch is sound here: every timer is
+    # already-elapsed at registration, every fired timer emits one row,
+    # and handleExpiredTimer registers no new timer — so the FIRST empty
     # batch with no sink growth proves no timers remained and nothing
     # can ever emit again (condition (b) in run_stream_to_memory).
-    return run_stream_to_memory(
-        out, "update", drain="settle", settle_quiet_batches=1
-    )
+    return run_stream_to_memory(out, "update", drain="settle")
 
 
 _TWS_TTL3_SCHEMA = T.StructType(
@@ -884,19 +734,9 @@ def tws_ttl_all_state_types(
     restarts, list holds only this batch's appends, map holds only
     this batch's types) while ttl >> run length reproduces the
     accumulate-forever semantics. The t1 pins both regimes."""
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    _bootstrap_protobuf = _minipb_bootstrap_closure()
     _ttl = int(ttl_ms)
 
-    class Ttl3Processor(StatefulProcessor):
-        def __init__(self):
-            self._minipb_bootstrap = True
-
-        def __setstate__(self, state):
-            _bootstrap_protobuf()
-            self.__dict__.update(state or {})
-
+    class Ttl3Processor(_processor_base()):
         def init(self, handle) -> None:
             self._v = handle.getValueState("v", "c LONG", ttlDurationMs=_ttl)
             self._l = handle.getListState("l", "eid LONG", ttlDurationMs=_ttl)
@@ -930,15 +770,6 @@ def tws_ttl_all_state_types(
                 }
             )
 
-        def handleExpiredTimer(self, key, timerValues, expiredTimerInfo):
-            return iter(())
-
-        def handleInitialState(self, key, initialState, timerValues) -> None:
-            pass
-
-        def close(self) -> None:
-            pass
-
     # no timers registered — same no-data-batch-free termination
     # argument as tws_ttl_user_counts above
     runner = _tws_runner_session(spark, no_data_batches=False)
@@ -956,12 +787,4 @@ def tws_ttl_all_state_types(
         timeMode="processingTime",
     )
     res = run_stream_to_memory(out, "update")
-    import pyspark.sql.functions as F
-    from pyspark.sql import Window
-
-    w = Window.partitionBy("user_id").orderBy(F.col("pt_ms").desc())
-    return (
-        res.withColumn("_rn", F.row_number().over(w))
-        .filter(F.col("_rn") == 1)
-        .select("user_id", "v_cnt", "l_len", "m_types")
-    )
+    return _final_emission(res, "pt_ms", "user_id", "v_cnt", "l_len", "m_types")

@@ -76,18 +76,31 @@ def streaming_session(
     """
     if state_partitions is None:
         return ensure_runtime_configs(spark)
+    confs = (("spark.sql.shuffle.partitions", str(state_partitions)),)
+    return _session_clone(spark, confs, no_data_batches)
+
+
+def _session_clone(
+    spark: SparkSession, confs: tuple[tuple[str, str], ...], no_data_batches: bool = True
+) -> SparkSession:
+    """``spark``'s ``newSession()`` clone with the runtime configs, then
+    the ``(key, value)`` pairs in ``confs``, set; ``no_data_batches=False``
+    appends the noDataMicroBatches override. Memoized per (parent,
+    overrides applied): the clone itself is stateless (each query gets
+    its own checkpoint/sink), but building one costs a newSession + ~a
+    dozen conf py4j round-trips, and a fresh clone per call would also
+    spawn fresh Python workers (``spark.python.worker.reuse`` is per
+    session)."""
+    if not no_data_batches:
+        confs = (*confs, ("spark.sql.streaming.noDataMicroBatches.enabled", "false"))
 
     def clone() -> SparkSession:
         runner = ensure_runtime_configs(spark.newSession())
-        runner.conf.set("spark.sql.shuffle.partitions", str(state_partitions))
-        if not no_data_batches:
-            runner.conf.set("spark.sql.streaming.noDataMicroBatches.enabled", "false")
+        for key, value in confs:
+            runner.conf.set(key, value)
         return runner
 
-    # memoized per (parent, width): the clone itself is stateless (each
-    # query gets its own checkpoint/sink), but building one costs a
-    # newSession + ~a dozen conf py4j round-trips per call
-    return _SESSION_CLONES.get_or_build(spark, (state_partitions, no_data_batches), clone)
+    return _SESSION_CLONES.get_or_build(spark, confs, clone)
 
 
 def stream_events(
@@ -138,14 +151,15 @@ def stream_events(
     return sdf
 
 
-def run_stream_to_memory(
-    sdf: DataFrame,
-    output_mode: str,
-    drain: str = "terminate",
-    settle_secs: float = 0.1,
-    settle_timeout: float = 60.0,
-    settle_quiet_batches: int = 2,
-) -> DataFrame:
+# settle drain: poll interval (correctness does not depend on it, only
+# poll frequency), bound on the whole wait for a query that never goes
+# quiet, and the quiet batches that prove completion
+_SETTLE_POLL_S = 0.1
+_SETTLE_TIMEOUT_S = 60.0
+_SETTLE_QUIET_BATCHES = 1
+
+
+def run_stream_to_memory(sdf: DataFrame, output_mode: str, drain: str = "terminate") -> DataFrame:
     """Run a streaming DataFrame to completion (AvailableNow) into a
     memory sink; return the final result as a batch DataFrame.
 
@@ -162,36 +176,29 @@ def run_stream_to_memory(
       batches because processing time always advances, so
       ``shouldRunAnotherBatch`` stays true — observed: 212 epochs and
       counting on a one-file source);
-    - ``"settle"``: watch StreamingQueryProgress and stop only after
-      TWO consecutive completed batches with ``numInputRows == 0`` and
-      no sink growth between them. ``processAllAvailable()`` ALSO never
+    - ``"settle"``: watch StreamingQueryProgress and stop at the first
+      completed batch with ``numInputRows == 0`` and no sink growth
+      since the previous batch. ``processAllAvailable()`` ALSO never
       returns under processingTime+AvailableNow (verified by traceback:
       it blocks while the executor schedules empty batch after empty
       batch), and those post-data empty batches are exactly where
       already-elapsed processing-time timers fire, so their emissions
-      are wanted — the first empty batch delivers them, the second
-      proves nothing more is coming. Progress-based, NOT sink-count
-      stability over a time window: a wall-clock window races slow
-      multi-file batches (observed: a 1 s window stopped a
-      maxFilesPerTrigger=1 query between file batches 5.4 s apart and
-      silently truncated the stream to batch 1). ``settle_secs`` IS the
-      poll interval (default 0.1 s — correctness does not depend on it,
-      only poll frequency); ``settle_timeout`` bounds the whole wait for
-      queries that legitimately never go quiet.
+      are wanted. Progress-based, NOT sink-count stability over a
+      time window: a wall-clock window races slow multi-file batches
+      (observed: a 1 s window stopped a maxFilesPerTrigger=1 query
+      between file batches 5.4 s apart and silently truncated the
+      stream to batch 1).
 
-    ``settle_quiet_batches`` (r14, guide §1/§5 — empty micro-batches
-    cost 0.4-0.7 s of state-store load/commit each): how many
-    consecutive quiet batches (numInputRows == 0, no sink growth) prove
-    completion. The default 2 is the conservative generic protocol. A
-    caller may pass 1 ONLY when its processor guarantees that a quiet
-    empty batch cannot be followed by an emitting one — true when (a)
-    the processor never registers timers (emissions ride
-    handleInputRows, so once the AvailableNow backlog is drained — the
-    first empty batch proves it, batches are sequential — nothing can
-    emit again), or (b) every registered timer is already-elapsed at
-    registration AND every fired timer emits ≥1 row and registers no
-    new timer (so a quiet empty batch means no timers remained). The
-    protocol stays progress-based either way.
+    One quiet batch proves completion (empty micro-batches cost 0.4-0.7 s
+    of state-store load/commit each, so the drain waits for no more)
+    ONLY when the processor guarantees that a quiet empty batch cannot
+    be followed by an emitting one — true when (a) the processor never
+    registers timers (emissions ride handleInputRows, so once the
+    AvailableNow backlog is drained — the first empty batch proves it,
+    batches are sequential — nothing can emit again), or (b) every
+    registered timer is already-elapsed at registration AND every fired
+    timer emits ≥1 row and registers no new timer (so a quiet empty
+    batch means no timers remained). A settle caller must meet (a) or (b).
     """
     import time as _time
 
@@ -207,7 +214,7 @@ def run_stream_to_memory(
     if drain == "terminate":
         q.awaitTermination()
     elif drain == "settle":
-        deadline = _time.time() + settle_timeout
+        deadline = _time.time() + _SETTLE_TIMEOUT_S
         last_pid, last_count, empty_quiet = None, -1, 0
         while _time.time() < deadline:
             prog = q.lastProgress
@@ -223,9 +230,9 @@ def run_stream_to_memory(
                 else:
                     empty_quiet = 0
                 last_pid, last_count = prog["batchId"], n
-                if empty_quiet >= settle_quiet_batches:
+                if empty_quiet >= _SETTLE_QUIET_BATCHES:
                     break
-            _time.sleep(settle_secs)
+            _time.sleep(_SETTLE_POLL_S)
         q.stop()
         q.awaitTermination()
     else:  # pragma: no cover - programmer error

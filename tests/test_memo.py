@@ -116,16 +116,18 @@ def test_none_builds_are_not_stored():
     assert len(store) == 0
 
 
-def test_clear_result_memo_empties_every_store():
+def test_clear_result_memo_empties_every_store(spark):
     from sparkflow_spark import catalog, dedup, memo, similarity
     from sparkflow_spark.queries import _RESULT_MEMO, clear_result_memo, load_all
     from sparkflow_spark.queries import similarity_suite
     from sparkflow_spark.streaming import windows
+    from sparkflow_spark.streaming.stateful import _tws_runner_session
 
     load_all()
     named = [
         _RESULT_MEMO,
         catalog._SCAN_CACHE,
+        catalog._SCAN_TUNED,
         catalog._DIM_CACHE,
         dedup._NGRAM_RESULT_CACHE,
         similarity._IVF_MODEL_CACHE,
@@ -139,8 +141,15 @@ def test_clear_result_memo_empties_every_store():
     for store in list(memo._STORES):
         store.get_or_build(owner, ("probe",), object)
         assert len(store) > 0
+    tws = _tws_runner_session(spark)
+    assert _tws_runner_session(spark) is tws
     clear_result_memo()
     assert all(len(store) == 0 for store in memo._STORES)
+    rebuilt = _tws_runner_session(spark)
+    assert rebuilt is not tws
+    assert rebuilt.conf.get("spark.sql.streaming.stateStore.providerClass").endswith(
+        "RocksDBStateStoreProvider"
+    )
 
 
 # Entries whose plans share memoized stages: scans, the n-gram pair

@@ -385,30 +385,17 @@ def test_statestore_reader_matches_processor_emissions(spark, sf_dir):
     import shutil
     import uuid
 
-    from pyspark.sql import Window
-
     from sparkflow_spark.catalog import warehouse_subdir
     from sparkflow_spark.streaming.state_reader import (
         read_state_store,
         state_metadata,
     )
-    from sparkflow_spark.streaming.stateful import (
-        _build_user_stats_processor,
-        _TWS_OUT_SCHEMA,
-        _tws_runner_session,
-    )
-    from sparkflow_spark.streaming.windows import stream_events
+    from sparkflow_spark.streaming.stateful import _final_emission, _user_stats_stream
 
     ck = warehouse_subdir(spark, "t1_statestore_ck", key=sf_dir)
     shutil.rmtree(ck, ignore_errors=True)
-    runner = _tws_runner_session(spark)
-    sdf = stream_events(runner, sf_dir, watermark=None, state_partitions=None)
-    stats = sdf.groupBy("user_id").transformWithStateInPandas(
-        statefulProcessor=_build_user_stats_processor(),
-        outputStructType=_TWS_OUT_SCHEMA,
-        outputMode="update",
-        timeMode="none",
-    )
+    stats = _user_stats_stream(spark, sf_dir)
+    runner = stats.sparkSession
     name = f"t1_ss_{uuid.uuid4().hex[:10]}"
     q = (
         stats.writeStream.format("memory")
@@ -420,13 +407,9 @@ def test_statestore_reader_matches_processor_emissions(spark, sf_dir):
     )
     q.awaitTermination()
     # the processor's final emission per key (highest c wins)
-    w = Window.partitionBy("user_id").orderBy(F.col("c").desc())
     final = {
         (r["user_id"], r["c"], r["sum_cents"])
-        for r in runner.table(name)
-        .withColumn("_rn", F.row_number().over(w))
-        .filter("_rn = 1")
-        .collect()
+        for r in _final_emission(runner.table(name), "c", "user_id", "c", "sum_cents").collect()
     }
     store = {
         (r["user_id"], r["c"], r["sum_cents"])
@@ -523,38 +506,31 @@ def test_tws_state_schema_evolution_carries_state(spark, sf_dir, tmp_path):
 
     from sparkflow_spark.catalog import table_path
     from sparkflow_spark.streaming.stateful import (
+        _TWS_CONFS,
         _ensure_protobuf,
-        _minipb_bootstrap_closure,
+        _processor_base,
         _tws_runner_session,
     )
-    from sparkflow_spark.streaming.windows import _as_stream_dir, stream_events
+    from sparkflow_spark.streaming.windows import _as_stream_dir, _session_clone, stream_events
 
     _ensure_protobuf()
-    runner = _tws_runner_session(spark)
-    runner.conf.set("spark.sql.streaming.stateStore.encodingFormat", "avro")
-
-    from pyspark.sql.streaming.stateful_processor import StatefulProcessor
-
-    _boot = _minipb_bootstrap_closure()
+    # its own clone: the avro encoding must not reach the shared TWS runner
+    avro = ("spark.sql.streaming.stateStore.encodingFormat", "avro")
+    runner = _session_clone(spark, (*_TWS_CONFS, avro))
+    shared = _tws_runner_session(spark)
+    assert runner is not shared
+    assert shared.conf.get(avro[0]) != "avro"
 
     def make_proc(v2: bool):
-        class P(StatefulProcessor):
-            def __init__(self):
-                self._b = True
-                self._v2 = v2
-
-            def __setstate__(self, state):
-                _boot()
-                self.__dict__.update(state or {})
-
+        class P(_processor_base()):
             def init(self, handle):
-                ddl = "c LONG, extra LONG" if self._v2 else "c LONG"
+                ddl = "c LONG, extra LONG" if v2 else "c LONG"
                 self._s = handle.getValueState("agg", ddl)
 
             def handleInputRows(self, key, rows, timerValues):
                 import pandas as pd
 
-                if self._v2:
+                if v2:
                     got = self._s.get() if self._s.exists() else (0, None)
                     c = got[0] or 0
                     # evolved field: NULL for pre-evolution state rows
@@ -563,7 +539,7 @@ def test_tws_state_schema_evolution_carries_state(spark, sf_dir, tmp_path):
                     got = self._s.get() if self._s.exists() else (0,)
                     c = got[0] or 0
                 c += sum(len(p) for p in rows)
-                if self._v2:
+                if v2:
                     self._s.update((c, extra + 1))
                     yield pd.DataFrame(
                         {"user_id": [key[0]], "c": [c], "extra": [extra + 1]}
@@ -573,15 +549,6 @@ def test_tws_state_schema_evolution_carries_state(spark, sf_dir, tmp_path):
                     yield pd.DataFrame(
                         {"user_id": [key[0]], "c": [c], "extra": [None]}
                     )
-
-            def handleExpiredTimer(self, *a):
-                return iter(())
-
-            def handleInitialState(self, *a):
-                pass
-
-            def close(self):
-                pass
 
         return P()
 

@@ -822,3 +822,100 @@ def test_tws_ttl_applies_to_value_list_and_map_state(spark, sf_dir, tmp_path):
     }
     assert got2 == truth2
     assert got2 != {k: v for k, v in got.items()}  # expiry really bit
+
+
+# ---------------------------------------------------------------------------
+# the no-data-batch boundary, both sides: where an entry's query may stop
+# at its last data batch and where it must run (or drain) post-data batches
+
+
+def _micro_batches(session, run) -> list[tuple[int, int]]:
+    """``run()``'s one streaming query on ``session`` as its completed
+    micro-batches, in order: (numInputRows, sink numOutputRows)."""
+    import threading
+
+    from pyspark.sql.streaming import StreamingQueryListener
+
+    class Recorder(StreamingQueryListener):
+        def __init__(self):
+            self.cv = threading.Condition()
+            self.started, self.terminated, self.batches = set(), set(), {}
+
+        def onQueryStarted(self, event):
+            with self.cv:
+                self.started.add(event.id)
+
+        def onQueryProgress(self, event):
+            p = event.progress
+            with self.cv:
+                self.batches.setdefault(p.id, []).append(
+                    (p.batchId, p.numInputRows, p.sink.numOutputRows)
+                )
+
+        def onQueryTerminated(self, event):
+            with self.cv:
+                self.terminated.add(event.id)
+                self.cv.notify_all()
+
+    rec = Recorder()
+    session.streams.addListener(rec)
+    try:
+        run()
+        # progress and termination events arrive on the listener bus,
+        # after the query has stopped
+        with rec.cv:
+            assert rec.cv.wait_for(lambda: rec.started <= rec.terminated, timeout=120)
+    finally:
+        session.streams.removeListener(rec)
+    assert len(rec.started) == 1, rec.started
+    (qid,) = rec.started
+    batches = sorted(rec.batches.get(qid, []))
+    assert [b[0] for b in batches] == list(range(len(batches))), batches
+    return [(n_in, n_out) for _, n_in, n_out in batches]
+
+
+def _run_entry(spark, sf_dir, name):
+    from sparkflow_spark.queries import REGISTRY, load_all
+
+    load_all()
+    return lambda: REGISTRY[name].fn(spark, sf_dir)
+
+
+def test_timer_free_tws_entry_runs_no_empty_batch(spark, sf_dir):
+    """st_tws_ttl_counts registers no timers, so it runs with no-data
+    batches off: every micro-batch it runs carries input."""
+    from sparkflow_spark.streaming.stateful import _tws_runner_session
+
+    batches = _micro_batches(
+        _tws_runner_session(spark, no_data_batches=False),
+        _run_entry(spark, sf_dir, "st_tws_ttl_counts"),
+    )
+    assert batches and all(n_in > 0 for n_in, _ in batches), batches
+
+
+def test_outer_join_entry_keeps_its_post_data_batch(spark, sf_dir):
+    """st_stream_stream_left_join emits its null-padded rows only in the
+    watermark-advancing batch after the data: that empty batch must run
+    and emit."""
+    from sparkflow_spark.streaming.windows import streaming_session
+
+    batches = _micro_batches(
+        streaming_session(spark), _run_entry(spark, sf_dir, "st_stream_stream_left_join")
+    )
+    *data, (n_in, n_out) = batches
+    assert data and all(d_in > 0 for d_in, _ in data), batches
+    assert n_in == 0 and n_out > 0, batches
+
+
+def test_pt_timer_entry_stops_on_its_first_quiet_batch(spark, sf_dir):
+    """st_tws_pt_timer_fired_keys never self-terminates (processingTime
+    + AvailableNow); the settle drain stops it at the first batch with
+    no input and no output, and that batch is its last."""
+    from sparkflow_spark.streaming.stateful import _tws_runner_session
+
+    batches = _micro_batches(
+        _tws_runner_session(spark), _run_entry(spark, sf_dir, "st_tws_pt_timer_fired_keys")
+    )
+    quiet = [i for i, (n_in, n_out) in enumerate(batches) if n_in == 0 and n_out == 0]
+    assert quiet == [len(batches) - 1], batches
+    assert sum(n_out for _, n_out in batches) > 0, batches
